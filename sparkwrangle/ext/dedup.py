@@ -33,6 +33,7 @@ from sparkwrangle.ext.hashing import (
     universal_hash_sql,
 )
 from sparkwrangle.ext.text import tokenize
+from sparkwrangle.session import eager_partitions
 
 _log = logging.getLogger("sparkwrangle.dedup")
 
@@ -553,36 +554,11 @@ def connected_components(
     edges = edges.localCheckpoint()
     prev = (obs.get["n"], obs.get["hs"])
 
-    # Scale-adaptive loop parallelism (r14, guide §2.2 — the pagerank
-    # pattern): the fast-path propagation and every contraction round
-    # run 3-5 tiny shuffles over edge/vertex-sized data, and at the
-    # session's full partition count per-task scheduling dominates on a
-    # small graph. The edge count is FREE here (it rides the fingerprint
-    # observation); the vertex side is bounded by the optimizer's size
-    # estimate of ``all_ids`` (conservative: an unknown estimate — e.g.
-    # a checkpointed RDD leaf — reads as huge and keeps the session
-    # conf). min() with the session conf means a cluster-sized graph or
-    # node universe keeps the cluster's partitioning — this only ever
-    # SHRINKS for small inputs. Conf restored in the finally; same
-    # session-global thread-safety caveat as ext/graph.pagerank.
-    spark = pairs.sparkSession
-    conf_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        _ids_bytes = int(
-            str(all_ids._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        _ids_bytes = conf_p * 64 * 1024
-    loop_p = max(
-        1,
-        min(
-            conf_p,
-            max(-(-int(prev[0]) // 40_000), -(-_ids_bytes // (64 * 1024))),
-        ),
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_p))
-
-    try:
+    # The fast path and every contraction round run 3-5 small shuffles
+    # over edge/vertex-sized data, sized here to the edge count (free: it
+    # rides the fingerprint) and the optimizer's size estimate of
+    # ``all_ids``.
+    with eager_partitions(pairs.sparkSession, rows=prev[0], sized=all_ids):
         # -- shallow fast path: fused-init propagation, one verification round
         if prev[0] > 0:
             und0 = edges.select("src", "dst").union(
@@ -694,8 +670,6 @@ def connected_components(
             F.col("node").alias(id_col),
             F.coalesce("root", "node").alias("cluster_id"),
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(conf_p))
 
 
 def connected_components_propagation(
@@ -871,27 +845,10 @@ def lsh_verified_pairs(
     instead of the whole corpus. Output is identical either way.
     """
     sigs = minhash_signatures(sh, id_col, k=k)
-    # Scale-adaptive parallelism for the candidate-pair checkpoint job
-    # (r14, guide §2.2 — same pattern and same 64 KB-per-task floor as
-    # prefix_filter_pairs): partitions derive from the optimizer's
-    # pruned-source size estimate of the shingle stream, min'd with the
-    # session conf (an unknown estimate — e.g. a checkpointed-RDD leaf —
-    # reads as huge and keeps the session conf); restored before the
-    # lazy verify plan is built, so the drain runs at session conf.
-    spark = sh.sparkSession
-    conf_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        _est = int(
-            str(sh._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        eager_p = max(1, min(conf_p, -(-_est // (64 * 1024))))
-    except Exception:
-        eager_p = conf_p
-    spark.conf.set("spark.sql.shuffle.partitions", str(eager_p))
-    try:
+    # the candidate-pair checkpoint job runs at a partition count sized
+    # to the shingle stream's size estimate; the lazy verify plan does not
+    with eager_partitions(sh.sparkSession, sized=sh):
         cand = lsh_candidate_pairs(sigs, id_col, k=k, bands=bands).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(conf_p))
     # exact verify via the shared member-set core (collect_set dedupes
     # the multiset input) — measured ~2× faster than the long-format
     # intersection join at sf0.1; sizes come from the set arrays
@@ -973,32 +930,12 @@ def prefix_filter_pairs(
     else:
         src = sh
         order_cols = [F.xxhash64("shingle"), F.col("shingle")]
-    # Scale-adaptive parallelism for the EAGER phase (guide §2.2, the
-    # pagerank/change-3 pattern): the ranked-stream and candidate
-    # checkpoints run several small shuffles whose per-task overhead
-    # dominates when the corpus is small — measured at sf0.1: entry
-    # total 5.10/4.08 s at the session's 32 partitions vs 3.33/2.83 s
-    # with the eager phase at 8 (interleaved A/B, drain at session conf
-    # both times). Partitions derive from the optimizer's own pruned-
-    # source size estimate at one 64 KB-per-task floor (the same floor
-    # the session's AQE coalescing uses), capped at the session conf so
-    # a cluster-sized corpus keeps the cluster's partitioning — this
-    # only ever SHRINKS below the conf for small inputs. Conf restored
-    # before returning; the verify/drain plan runs at session conf.
-    # Thread-safety caveat as in ext/graph.pagerank: the conf mutation
-    # is session-global for the duration of the two checkpoint jobs.
-    spark = sh.sparkSession
-    conf_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        _est = int(
-            str(sh._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-        eager_p = max(1, min(conf_p, -(-_est // (64 * 1024))))
-    except Exception:
-        eager_p = conf_p
+    # The two eager checkpoints run at a partition count sized to the
+    # shingle stream's size estimate (measured at sf0.1: entry total
+    # 5.10/4.08 s at the session's 32 partitions vs 3.33/2.83 s at 8);
+    # the lazy verify plan does not.
     wdoc = Window.partitionBy(id_col)
-    spark.conf.set("spark.sql.shuffle.partitions", str(eager_p))
-    try:
+    with eager_partitions(sh.sparkSession, sized=sh):
         ranked = src.select(
             id_col,
             "shingle",
@@ -1063,8 +1000,6 @@ def prefix_filter_pairs(
             # re-evaluates per consumer, same policy as lsh_verified_pairs
             .localCheckpoint()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(conf_p))
     # exact verify via the shared member-set core, reading the RANKED
     # checkpoint (already tokenized + distinct) instead of re-deriving
     # the shingle stream from the raw input; sizes come from cand's
@@ -1166,19 +1101,19 @@ def edit_distance_pairs(
     # The short-string existence probe rides the prefix checkpoint job as
     # an Observation instead of its own take(1) job (guide §1/§5: one
     # fewer eager driver barrier per call). The observe sits ABOVE the
-    # length >= q gram filter, so sub-q strings ARE counted; Catalyst
+    # length >= q gram filter, so sub-q strings ARE seen; Catalyst
     # does not push filters below CollectMetrics (probed — the node must
     # see exactly the rows of the Dataset it was attached to), so the
-    # count is over every non-null string. The gram subtree evaluates the
-    # observed node once per consuming branch, which can only OVERcount —
-    # the probe consumes a boolean (> 0), so that is harmless. sum() over
-    # an empty corpus is NULL → `or 0`.
+    # flag covers every non-null string. It is a max(), not a count: the
+    # gram subtree evaluates the observed node once per consuming branch,
+    # so a sum would over-count. max() over an empty corpus is NULL,
+    # which reads as False.
     from pyspark.sql import Observation
 
     _short_obs = Observation()
     strs_obs = strs.observe(
         _short_obs,
-        F.sum((F.length("_s") < min_len_long).cast("long")).alias("n_short"),
+        F.max(F.length("_s") < min_len_long).alias("has_short"),
     )
     # distinct positional q-grams -> gram SET per string; the sequence
     # upper bound is always >= 0 after the length filter (sequence counts
@@ -1228,8 +1163,7 @@ def edit_distance_pairs(
     # The existence bit was observed during the prefix checkpoint job
     # above (r14: previously a separate take(1) probe job; the
     # Observation folds it into the job that runs anyway).
-    has_shorts = (_short_obs.get["n_short"] or 0) > 0
-    if has_shorts:
+    if _short_obs.get["has_short"]:
         shorts = lens.filter(F.col("_len") < min_len_long).select(
             "_id",
             F.explode(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparkwrangle.session import eager_partitions
+
 DAMPING = 0.85
 RF_CONTRIB = 15
 RF_RANK = 12
@@ -46,8 +48,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping: float = DAMPING,
-    loop_shuffle_partitions: int | None = None,
-    loop_rows_per_partition: int = 40_000,
 ) -> DataFrame:
     """``iters`` power-iteration rounds of PageRank over a DIRECTED edge
     list (pass both directions for an undirected graph). Nodes with no
@@ -72,53 +72,19 @@ def pagerank(
     |V| rows — vertex-sized, never edge-sized, exactly what a cluster
     materializes between Pregel supersteps.
     """
-    # Scale-adaptive iteration parallelism (guide §2.2: size shuffle
-    # partitions to the data, not a constant; the brief's "derive from
-    # input size" rule). The power-iteration loop runs ~4 shuffles and a
-    # vertex-sized localCheckpoint per round; with the session's full
-    # shuffle-partition count on a small graph, per-task and per-stage
-    # scheduling dominates (measured at sf0.1, |E|=285k: 5.9 s warm at
-    # 32 partitions vs 2.5 s at 8 — identical ranks, decimal
-    # accumulators are partitioning-insensitive by design). The loop
-    # therefore runs its shuffles at min(session conf, ceil(|E| /
-    # loop_rows_per_partition)): on a cluster-sized graph the min()
-    # keeps the cluster's configured partitioning — this only ever
-    # SHRINKS below the session conf when the edge table is small.
-    # |E| comes from a count over ``edges``, which callers should pass
-    # materialized (the catalog checkpoints it first — deg and every
-    # round consume it anyway).
-    # NOTE (thread-safety): the derived count is applied by temporarily
-    # mutating the session-global spark.sql.shuffle.partitions around the
-    # eager loop below — any query PLANNED CONCURRENTLY on this session
-    # from another thread would pick up the shrunken value. Single-query
-    # drivers (the catalog, the bench) are unaffected; a multi-threaded
-    # caller should pass loop_shuffle_partitions explicitly (e.g. its own
-    # cluster setting) so no conf mutation window matters to it.
-    spark = edges.sparkSession
-    conf_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if loop_shuffle_partitions is None:
-        n_edges = edges.count()
-        loop_shuffle_partitions = max(
-            1, min(conf_p, -(-n_edges // loop_rows_per_partition))
-        )
-    else:
-        # an explicit 0/negative would reach spark.conf.set unvalidated
-        # and fail every loop shuffle at runtime — clamp like the derived
-        # branch does
-        loop_shuffle_partitions = max(1, int(loop_shuffle_partitions))
-
     deg = edges.groupBy(src).agg(F.count("*").alias("deg"))
     nn = F.broadcast(nodes.agg(F.count("*").alias("n_nodes")))
     # Static vertex table (node, deg, n_nodes), built ONCE: carrying deg
     # and the node count inside the checkpointed vector means each round
     # is a single edges⋈ranks join — no per-round deg join and no
     # per-round crossJoin(count) broadcast job.
-    # The conf is set only around the EAGER part of the loop (vtab +
-    # per-round localCheckpoints all materialize inside this block) and
-    # restored before returning; the returned frame is a plain select
-    # over the last checkpoint, so no later execution depends on it.
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_shuffle_partitions))
-    try:
+    # The eager loop (~4 small shuffles + a checkpoint per round) runs at
+    # a partition count sized to |E| (measured at sf0.1, |E|=285k: 5.9 s
+    # warm at 32 partitions vs 2.5 s at 8 — identical ranks, the decimal
+    # accumulators are partitioning-insensitive). |E| is a count over
+    # ``edges``, which callers should pass materialized (the catalog
+    # checkpoints it first — deg and every round consume it anyway).
+    with eager_partitions(edges.sparkSession, rows=edges.count()):
         vtab = (
             nodes.join(deg, nodes[node_col] == deg[src], "left")
             .crossJoin(nn)
@@ -126,8 +92,6 @@ def pagerank(
             .localCheckpoint()
         )
         ranks = _power_iterations(vtab, edges, node_col, src, dst, iters, damping)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(conf_p))
     return ranks.select(node_col, "rank")
 
 

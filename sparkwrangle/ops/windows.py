@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from sparkwrangle.session import shuffle_partitions
+
 
 def series_window(keys: list[str], order: list[str]) -> WindowSpec:
     return Window.partitionBy(*keys).orderBy(*order)
@@ -350,12 +352,8 @@ def _grouped_global_rank(
 
     NULL group keys form their own group, exactly like a window's
     PARTITION BY (the offsets join is null-safe)."""
-    spark = df.sparkSession
     if num_partitions is None:
-        try:
-            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            num_partitions = 32
+        num_partitions = shuffle_partitions(df.sparkSession) or 32
     if order_block is None:
         order_block = _quantile_block_expr(df, group_cols, order_cols, num_partitions)
     else:

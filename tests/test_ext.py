@@ -1754,11 +1754,17 @@ def test_pagerank_star_graph_and_mass_conservation(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-6
 
 
-def test_pagerank_loop_partitioning_invariant(spark):
-    """The scale-adaptive loop shuffle-partition count (r13 optimization:
-    derived from |E| and capped by the session conf) must not change a
-    single rank bit — the decimal accumulators make the per-round sums
-    partitioning-insensitive — and must restore the session conf."""
+def test_pagerank_loop_partitioning_invariant(spark, monkeypatch):
+    """The scale-adaptive loop partition count (derived from |E| and
+    capped by the session conf) must not change a single rank bit — the
+    decimal accumulators make the per-round sums partitioning-
+    insensitive — and the session conf must read the same afterwards.
+    The test drives the count through the per-partition row target and
+    records what the loop actually ran at."""
+    from contextlib import contextmanager
+
+    from sparkwrangle import session
+    from sparkwrangle.ext import graph
     from sparkwrangle.ext.graph import pagerank
 
     edges = spark.createDataFrame(
@@ -1774,15 +1780,21 @@ def test_pagerank_loop_partitioning_invariant(spark):
         for r in pagerank(edges, nodes, iters=4).collect()
     }
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    for p in (1, 3, 17):
-        got = {
-            r.node: r.rank
-            for r in pagerank(
-                edges, nodes, iters=4, loop_shuffle_partitions=p
-            ).collect()
-        }
-        assert got == base, f"ranks diverged at loop_shuffle_partitions={p}"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    used = []
+
+    @contextmanager
+    def spy(*args, **kwargs):
+        with session.eager_partitions(*args, **kwargs):
+            used.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            yield
+
+    monkeypatch.setattr(graph, "eager_partitions", spy)
+    for rows in (1, 2, 5):  # |E| = 5 -> 5, 3, 1 loop partitions
+        monkeypatch.setattr(session, "ROWS_PER_PARTITION", rows)
+        got = {r.node: r.rank for r in pagerank(edges, nodes, iters=4).collect()}
+        assert got == base, f"ranks diverged at {used[-1]} loop partitions"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert used == ["5", "3", "1"]
 
 
 def test_bpe_segment_counts_hand_corpus(spark):

@@ -5,6 +5,8 @@ our SQL LSH finds."""
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -34,6 +36,23 @@ def test_wrangle_listings(spark):
     assert by_company["Beta"] == [(0, "BET", "NYQ"), (1, "BET.F", "FRA")]
 
 
+def _skip_without_workbook(test):
+    """Skip (with the missing path as the reason) when the reference
+    workbook is not present on this host; any other error still fails."""
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        try:
+            return test(*args, **kwargs)
+        except FileNotFoundError as e:
+            if not str(e.filename).endswith("Stocks.xlsx"):
+                raise
+            pytest.skip(f"reference workbook not present: {e.filename}")
+
+    return run
+
+
+@_skip_without_workbook
 def test_real_workbook_reproduces_reference_universe(spark):
     """Ground truth from the reference's own committed outputs: the
     wrangled eligible universe is exactly 41 companies (the cell-32

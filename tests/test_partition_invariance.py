@@ -66,6 +66,8 @@ QUERIES = [
     "h_struct_map_suite",       # two-level decimal partial rollup (r9)
     "x_stream_ann_batch_twin",  # persisted-index probe, unioned micro-batches
     "x_dedup_prefix_filter_join",  # prefix-filter candidates + exact verify
+    "x_dedup_pipeline_end_to_end",  # LSH candidates + exact verify keep-list
+    "x_dedup_cc_keep",          # verified pairs -> connected components
     "x_quality_prune",          # two-level range percent_rank (rank must
                                 # not depend on range-partition count)
 ]

@@ -4,6 +4,9 @@ joins for dimensions, no Python in relational paths."""
 
 from __future__ import annotations
 
+import re
+from dataclasses import dataclass
+
 import pytest
 
 from sparkwrangle.catalog import CATALOG
@@ -101,14 +104,83 @@ _PYTHON_OK = {
 }
 
 
-def test_plan_linter_all_queries(spark):
+def _keyset(seq) -> set[str]:
+    """Expression strings of a JVM Seq[Expression], expression ids
+    stripped."""
+    return {re.sub(r"#\d+L?", "", seq.apply(i).toString()) for i in range(seq.size())}
+
+
+def hash_part_keys(p) -> list[set[str]]:
+    """Key sets of every HashPartitioning in a JVM Partitioning (a join's
+    PartitioningCollection holds one per side). Walks the partitioning's
+    ``expressions()`` children, so a nested key such as
+    ``xxhash64(company, block_id, 42)`` stays one whole key."""
+    kind = p.getClass().getSimpleName()
+    if kind == "PartitioningCollection":
+        ps = p.partitionings()
+        return [k for i in range(ps.size()) for k in hash_part_keys(ps.apply(i))]
+    if kind == "HashPartitioning":
+        return [_keyset(p.expressions())]
+    return []
+
+
+def _shuffled_join_partitionings(plan) -> list[tuple[set[str], set[str]]]:
+    """(join keys, child hash-partitioning keys) for both sides of every
+    SortMergeJoin/ShuffledHashJoin in a JVM physical plan (the AQE
+    initial plan when adaptive)."""
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    out = []
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        ch = node.children()
+        for i in range(ch.size()):
+            stack.append(ch.apply(i))
+        if node.getClass().getSimpleName() not in (
+            "SortMergeJoinExec",
+            "ShuffledHashJoinExec",
+        ):
+            continue
+        for side, keys in ((0, node.leftKeys()), (1, node.rightKeys())):
+            ks = _keyset(keys)
+            for pk in hash_part_keys(ch.apply(side).outputPartitioning()):
+                out.append((ks, pk))
+    return out
+
+
+@dataclass(frozen=True)
+class _EntryPlans:
+    formatted: str  # formatted explain (full PushedFilters/ReadSchema)
+    executed: str  # executedPlan().toString()
+    joins: list  # _shuffled_join_partitionings of the executed plan
+
+
+@pytest.fixture(scope="session")
+def catalog_plans(spark) -> dict[str, _EntryPlans]:
+    """Every catalog entry built ONCE (its eager build-time jobs
+    included) for the three catalog-wide plan lints below."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    out = {}
+    for name in sorted(CATALOG):
+        qe = CATALOG[name].fn(spark, SF_SMOKE)._jdf.queryExecution()
+        plan = qe.executedPlan()
+        out[name] = _EntryPlans(
+            qe.explainString(mode),
+            plan.toString(),
+            _shuffled_join_partitionings(plan),
+        )
+    return out
+
+
+def test_plan_linter_all_queries(catalog_plans):
     """Sweep every catalog query's physical plan for red flags: row-wise
     Python eval in relational paths and accidental cartesian products.
     ArrowEvalPython is linted too — vectorized scalar UDFs are still
     Python on executors and must be on the sanctioned list."""
     problems = []
-    for name in sorted(CATALOG):
-        plan = _plan(spark, name)
+    for name, plans in catalog_plans.items():
+        plan = plans.formatted
         if name not in _PYTHON_OK:
             for marker in (
                 "BatchEvalPython",
@@ -142,7 +214,7 @@ _SINGLE_PARTITION_OK = {
 }
 
 
-def test_no_unbounded_single_partition_exchange(spark):
+def test_no_unbounded_single_partition_exchange(catalog_plans):
     """No plan may funnel UNBOUNDED data through Exchange
     SinglePartition — a global row_number/sort over corpus-scale input
     serializes one task (the c_positional_join bug class, fixed in
@@ -155,10 +227,8 @@ def test_no_unbounded_single_partition_exchange(spark):
     exchange as 'Arguments: SinglePartition', which a naive substring
     lint never matches (found the hard way in round 7)."""
     problems = []
-    for name in sorted(CATALOG):
-        jdf = CATALOG[name].fn(spark, SF_SMOKE)._jdf
-        plan = jdf.queryExecution().executedPlan().toString()
-        lines = plan.splitlines()
+    for name, plans in catalog_plans.items():
+        lines = plans.executed.splitlines()
         for i, ln in enumerate(lines):
             if "Exchange SinglePartition" not in ln:
                 continue
@@ -739,6 +809,80 @@ def test_checkpoint_sites_are_allowlisted():
     assert not stale, f"allowlist stale: {stale}"
 
 
+def _shuffle_partition_conf_sites(src: str) -> list[tuple[str, int]]:
+    """Every ``<x>.conf.set(...)`` call in a module source that writes
+    ``spark.sql.shuffle.partitions``, as (enclosing function, lineno).
+    A non-constant key cannot be resolved statically and is flagged for
+    review, like the broadcast lint's non-constant hint names."""
+    import ast
+
+    tree = ast.parse(src)
+    spans = [
+        (n.lineno, n.end_lineno or n.lineno, n.name)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    out = []
+    for node in ast.walk(tree):
+        f = getattr(node, "func", None)
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(f, ast.Attribute)
+            and f.attr == "set"
+            and isinstance(f.value, ast.Attribute)
+            and f.value.attr == "conf"
+            and node.args
+        ):
+            continue
+        key = node.args[0]
+        if isinstance(key, ast.Constant) and key.value != "spark.sql.shuffle.partitions":
+            continue
+        enc, enc_lo = "<module>", -1
+        for lo, hi, name in spans:
+            if lo <= node.lineno <= hi and lo > enc_lo:
+                enc, enc_lo = name, lo
+        out.append((enc, node.lineno))
+    return out
+
+
+def test_shuffle_partition_conf_writes_are_allowlisted():
+    """Operators must not write the session-global shuffle-partition
+    count themselves: a concurrent query or streaming micro-batch on the
+    same session plans with it. The writes are ``prep_session``'s clamp
+    of a foreign session's default and the one eager-phase window,
+    ``session.eager_partitions`` (safe parse, locked, restored); every
+    operator sizes its eager phase through that window. New sites fail
+    until reviewed."""
+    import os
+
+    import sparkwrangle
+
+    src = (
+        "def f(spark, df, k):\n"
+        "    spark.conf.set('spark.sql.shuffle.partitions', '8')\n"
+        "    df.sparkSession.conf.set('spark.sql.shuffle.partitions', 3)\n"
+        "    spark.conf.set(k, '8')\n"  # non-constant key: flagged
+        "    spark.conf.set('spark.sql.ansi.enabled', 'false')\n"
+        "    spark.conf.get('spark.sql.shuffle.partitions')\n"
+    )
+    assert _shuffle_partition_conf_sites(src) == [("f", 2), ("f", 3), ("f", 4)]
+
+    allow = {
+        ("session.py", "prep_session"): 1,  # clamp of a foreign 200 default
+        ("session.py", "eager_partitions"): 2,  # the window: set + restore
+    }
+    root = os.path.dirname(sparkwrangle.__file__)
+    found: dict[tuple[str, str], int] = {}
+    for dirpath, _, files in os.walk(root):
+        for fn in files:
+            if fn.endswith(".py"):
+                p = os.path.join(dirpath, fn)
+                rel = os.path.relpath(p, root).replace(os.sep, "/")
+                for enc, _lineno in _shuffle_partition_conf_sites(open(p).read()):
+                    found[(rel, enc)] = found.get((rel, enc), 0) + 1
+    assert found == allow, f"unreviewed shuffle-partition conf writes: {found}"
+
+
 # Subset keys a co-partitioned join may legally accept (session.py sets
 # spark.sql.requireAllClusterKeysForCoPartition=false): each must be a
 # HIGH-CARDINALITY entity key, because the accepted subset becomes the
@@ -759,7 +903,7 @@ _SUBSET_COPARTITION_OK = {
 }
 
 
-def test_subset_copartitioned_joins_use_high_cardinality_keys(spark):
+def test_subset_copartitioned_joins_use_high_cardinality_keys(catalog_plans):
     """Every SortMergeJoin/ShuffledHashJoin child whose hash partitioning
     is a PROPER subset of the join keys must be partitioned on
     high-cardinality keys only (allowlist above). Walks the JVM plan
@@ -767,48 +911,29 @@ def test_subset_copartitioned_joins_use_high_cardinality_keys(spark):
     effective output partitioning — possibly inherited through
     windows/joins several operators up — is read from the same property
     EnsureRequirements consulted."""
-    import re
-
-    def keyset(seq):
-        return {
-            re.sub(r"#\d+L?", "", seq.apply(i).toString())
-            for i in range(seq.size())
-        }
-
-    def hash_part_keys(p):
-        out = []
-        for m in re.finditer(r"hashpartitioning\(([^)]*)\)", p.toString()):
-            args = [a.strip() for a in m.group(1).split(",")]
-            out.append({re.sub(r"#\d+L?", "", a) for a in args[:-1]})
-        return out
-
     problems = []
-    for name in sorted(CATALOG):
-        jdf = CATALOG[name].fn(spark, SF_SMOKE)._jdf
-        plan = jdf.queryExecution().executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.initialPlan()
-        stack = [plan]
-        while stack:
-            node = stack.pop()
-            ch = node.children()
-            for i in range(ch.size()):
-                stack.append(ch.apply(i))
-            if node.getClass().getSimpleName() not in (
-                "SortMergeJoinExec",
-                "ShuffledHashJoinExec",
-            ):
-                continue
-            for side in (0, 1):
-                ks = keyset(node.leftKeys() if side == 0 else node.rightKeys())
-                child = node.children().apply(side)
-                for pk in hash_part_keys(child.outputPartitioning()):
-                    if pk and pk < ks and not pk <= _SUBSET_COPARTITION_OK:
-                        problems.append(
-                            f"{name}: join on {sorted(ks)} accepts subset "
-                            f"co-partitioning on {sorted(pk)} — low-"
-                            "cardinality subset keys collapse the key "
-                            "space at scale; allowlist only if the key "
-                            "is per-entity"
-                        )
+    for name, plans in catalog_plans.items():
+        for ks, pk in plans.joins:
+            if pk and pk < ks and not pk <= _SUBSET_COPARTITION_OK:
+                problems.append(
+                    f"{name}: join on {sorted(ks)} accepts subset "
+                    f"co-partitioning on {sorted(pk)} — low-"
+                    "cardinality subset keys collapse the key "
+                    "space at scale; allowlist only if the key "
+                    "is per-entity"
+                )
     assert not problems, problems
+
+
+def test_hash_part_keys_keeps_nested_keys_whole(spark):
+    """A hash key that is itself a call with arguments is one key. The
+    old regex parse of ``hashpartitioning(...)`` stopped at the first
+    ``)`` and dropped the last argument, reading this partitioning as
+    {'xxhash64(a', 'b'}."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(8).select(F.col("id").alias("a"), (F.col("id") % 2).alias("b"))
+    plan = df.repartition(4, F.xxhash64("a", "b"))._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    assert hash_part_keys(plan.outputPartitioning()) == [{"xxhash64(a, b, 42)"}]

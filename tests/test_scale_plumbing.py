@@ -107,3 +107,60 @@ def test_curated_corpus_write_matches_keep_list(spark, tmp_path):
     kept_ids = {r.doc_id for r in keep.select("doc_id").collect()}
     got_ids = {r.doc_id for r in back.select("doc_id").collect()}
     assert got_ids == kept_ids
+
+
+def test_eager_partitions_window(spark):
+    """The eager-phase window sizes the count to the input, caps it at the
+    session's count, restores the session value, and leaves a non-integer
+    session value (a foreign session's ``auto``) untouched."""
+    from types import SimpleNamespace
+
+    from sparkwrangle.session import eager_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    with eager_partitions(spark, rows=120_000):
+        assert spark.conf.get(key) == "3"
+    with eager_partitions(spark, rows=10**9):
+        assert spark.conf.get(key) == before
+    assert spark.conf.get(key) == before
+
+    writes = []
+    conf = SimpleNamespace(get=lambda k: "auto", set=lambda k, v: writes.append(v))
+    with eager_partitions(SimpleNamespace(conf=conf), rows=10):
+        pass
+    assert writes == []
+
+
+def test_eager_partitions_windows_never_interleave(spark):
+    """Concurrent windows on one session are serialized: inside each, the
+    conf holds that window's own count, and the session value is back
+    once all have closed."""
+    import sys
+    import threading
+
+    from sparkwrangle.session import eager_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    seen = []
+
+    def worker(n):
+        for _ in range(10):
+            with eager_partitions(spark, rows=n * 40_000):
+                seen.append((n, spark.conf.get(key)))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(n,)) for n in range(1, 9)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 80
+    assert all(got == str(n) for n, got in seen), [x for x in seen if x[1] != str(x[0])]
+    assert spark.conf.get(key) == before
