@@ -32,7 +32,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sparkwrangle.ops.filters import minute_of_day, safe_div_pandas
-from sparkwrangle.stateful.trader import backtest_balances, backtest_trades
+from sparkwrangle.stateful.trader import (
+    _check_scope,
+    _combined_local,
+    _stitch_balances,
+    _stitch_ledger,
+)
 
 
 def build_intraday_feed(
@@ -155,47 +160,38 @@ def intraday_backtest(
 ) -> tuple[DataFrame, DataFrame]:
     """Run S2 over the feed → (trades, balance_history).
 
-    Relaxed mode (``state_scope="block"``) runs the per-(company, block)
-    Python state machine ONCE: a single combined local pass emits both
-    the trade rows and the per-tick balance rows as a tagged union,
-    which is localCheckpoint'ed (eager — the lineage break is what makes
-    the two downstream reads share one applyInPandas execution; the
-    package's cache/persist ban is about unbounded memory pinning,
-    whereas this materialization is the tick relation the operator
-    produces anyway) and split JVM-side into the two stitches. Calling
-    the two standalone operators instead would run the expensive Python
-    pass twice over the full feed (round-12 ADVICE item).
-
-    Faithful mode keeps the two standalone calls: its per-company pass
-    is the documented sequential bottleneck either way, and the
-    checkpoint would pin the full tick relation for no parallelism win.
+    Both scopes run the Python state machine ONCE per call: one combined
+    local pass (``stateful.trader._combined_local``) emits the trade rows
+    and the per-tick balance rows as a tagged union, grouped by company
+    (faithful mode) or by (company, block_id) (relaxed mode,
+    ``state_scope="block"``). The union is localCheckpoint'ed eagerly and
+    split JVM-side. The lineage break is what makes every downstream read
+    share one applyInPandas execution: ``balance_report`` reads the
+    balances twice and ``trade_report`` reads the trades, so the two
+    standalone operators would run the trader (and rebuild the feed)
+    three times per backtest. The package's cache/persist ban is about
+    unbounded memory pinning; this materialization is the tick relation
+    the operator produces anyway. Faithful mode selects the local columns
+    as they are; relaxed mode stitches the carried ledger and balances.
     """
+    _check_scope(feed, state_scope, params)
+    keys = {"company": ("company",), "block": ("company", "block_id")}[state_scope]
+    local = _combined_local(feed, params, keys).localCheckpoint(eager=True)
+    trades_local = local.filter(F.col("is_trade"))
+    ticks = local.filter(~F.col("is_trade"))
     if state_scope == "block":
-        from sparkwrangle.stateful.trader import (
-            _block_combined_local,
-            _check_scope,
-            _stitch_balances,
-            _stitch_ledger,
+        trades = _stitch_ledger(trades_local, params)
+        return (
+            trades.select("company", "trade_seq", "close_type", "roi"),
+            _stitch_balances(ticks, params),
         )
-
-        _check_scope(feed, state_scope, params)
-        local = _block_combined_local(feed, params).localCheckpoint(eager=True)
-        trades_local = local.filter(F.col("is_trade")).select(
-            "company", "block_id", "first_seq", "trade_seq_local",
-            "close_type", "roi_local", "bal_delta",
-        )
-        trades = _stitch_ledger(trades_local, params).select(
-            "company", "trade_seq", "close_type", "roi"
-        )
-        bal_local = local.filter(~F.col("is_trade")).select(
-            "company", "block_id", "first_seq", "tick_seq", "ts",
-            "balance", "block_last",
-        )
-        return trades, _stitch_balances(bal_local, params)
-    return (
-        backtest_trades(feed, params, state_scope=state_scope),
-        backtest_balances(feed, params, state_scope=state_scope),
+    trades = trades_local.select(
+        "company",
+        F.col("trade_seq_local").alias("trade_seq"),
+        "close_type",
+        F.col("roi_local").alias("roi"),
     )
+    return trades, ticks.select("company", "ts", "balance")
 
 
 def balance_report(balances: DataFrame) -> DataFrame:

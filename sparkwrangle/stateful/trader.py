@@ -533,42 +533,43 @@ def _block_balances_local(feed: DataFrame, params: dict) -> DataFrame:
     return feed.select(*cols).groupBy("company", "block_id").applyInPandas(run, schema)
 
 
-def _block_combined_local(feed: DataFrame, params: dict) -> DataFrame:
-    """Relaxed-mode SINGLE local pass emitting BOTH relations as a tagged
-    union: the per-trade rows `_block_trades_local` would produce
-    (``is_trade=true``; tick columns null) and the per-tick balance rows
-    `_block_balances_local` would produce (``is_trade=false``; trade
-    columns null). ``pipelines.intraday.intraday_backtest`` uses this —
-    when BOTH outputs are requested, running the expensive per-(company,
-    block) Python state machine once and splitting JVM-side halves the
-    applyInPandas cost vs calling the two standalone operators (each of
-    which re-runs the feed; round-12 ADVICE item)."""
+def _combined_local(
+    feed: DataFrame, params: dict, keys: tuple[str, ...]
+) -> DataFrame:
+    """ONE Python pass per ``keys`` group emitting BOTH trader relations as
+    a tagged union: one row per trade (``is_trade=true``; tick columns
+    null) and one row per tick with its balance (``is_trade=false``;
+    trade columns null). ``keys`` is ``("company",)`` for faithful mode —
+    the feed needs no ``block_id`` — or ``("company", "block_id")`` for
+    relaxed mode, where ``first_seq``, ``bal_delta`` and ``block_last``
+    feed the two JVM stitches. ``pipelines.intraday.intraday_backtest``
+    checkpoints this once and splits it JVM-side, so a backtest whose
+    reports read both outputs (balances twice) runs the trader once
+    instead of once per read."""
     bal0 = float(params["bal"])
+    key_schema = ", ".join(f"{k} {_col_type(feed, k)}" for k in keys)
     schema = (
-        f"company {_key_type(feed)}, block_id {_col_type(feed, 'block_id')}, "
-        "first_seq long, is_trade boolean, "
+        f"{key_schema}, first_seq long, is_trade boolean, "
         "trade_seq_local int, close_type string, roi_local double, "
         "bal_delta double, "
         "tick_seq int, ts timestamp, balance double, block_last boolean"
     )
     cols = [
-        "company", "block_id", "first_seq", "is_trade",
+        *keys, "first_seq", "is_trade",
         "trade_seq_local", "close_type", "roi_local", "bal_delta",
         "tick_seq", "ts", "balance", "block_last",
     ]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         trades, history, balances = run_trader_on_feed(pdf, params)
-        company = pdf["company"].iloc[0]
-        block = pdf["block_id"].iloc[0]
+        key_vals = {k: pdf[k].iloc[0] for k in keys}
         first_seq = int(pdf["feed_seq"].min())
         prev = [bal0] + balances[:-1]
         n = len(history)
         ts, bals = zip(*history) if history else ((), ())
         trade_rows = pd.DataFrame(
             {
-                "company": company,
-                "block_id": block,
+                **key_vals,
                 "first_seq": first_seq,
                 "is_trade": True,
                 "trade_seq_local": range(len(trades)),
@@ -584,8 +585,7 @@ def _block_combined_local(feed: DataFrame, params: dict) -> DataFrame:
         )
         tick_rows = pd.DataFrame(
             {
-                "company": company,
-                "block_id": block,
+                **key_vals,
                 "first_seq": first_seq,
                 "is_trade": False,
                 "trade_seq_local": None,
@@ -618,12 +618,8 @@ def _block_combined_local(feed: DataFrame, params: dict) -> DataFrame:
             ignore_index=True,
         )
 
-    in_cols = ["company", "block_id", "feed_seq", "ts", "ticker_idx", "price", "ret"]
-    return (
-        feed.select(*in_cols)
-        .groupBy("company", "block_id")
-        .applyInPandas(run, schema)
-    )
+    in_cols = [*keys, "feed_seq", "ts", "ticker_idx", "price", "ret"]
+    return feed.select(*in_cols).groupBy(*keys).applyInPandas(run, schema)
 
 
 def _stitch_balances(local: DataFrame, params: dict) -> DataFrame:

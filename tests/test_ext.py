@@ -539,10 +539,9 @@ def test_connected_components_matches_propagation_baseline(spark):
     singletons mixed)."""
     import random
 
-    from sparkwrangle.ext.dedup import (
-        connected_components,
-        connected_components_propagation,
-    )
+    from cc_baseline import connected_components_propagation
+
+    from sparkwrangle.ext.dedup import connected_components
 
     rng = random.Random(42)
     for trial in range(3):
@@ -1209,10 +1208,11 @@ def test_exact_dedup_edge_semantics(spark):
     exhaustion instead of returning a non-star-forest labeling."""
     import pytest
 
+    from cc_baseline import connected_components_propagation
+
     from sparkwrangle.ext.dedup import (
         band_struct_array,
         connected_components,
-        connected_components_propagation,
         exact_dup_groups,
         simhash,
     )

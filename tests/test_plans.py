@@ -700,7 +700,7 @@ def test_python_on_executor_sites_are_allowlisted():
         ("stateful/trader.py", "backtest_balances", "applyInPandas"): (1, "sequential trader state machine"),
         ("stateful/trader.py", "_block_trades_local", "applyInPandas"): (1, "sequential trader state machine, relaxed per-(company, block) scope"),
         ("stateful/trader.py", "_block_balances_local", "applyInPandas"): (1, "sequential trader state machine, relaxed per-(company, block) scope"),
-        ("stateful/trader.py", "_block_combined_local", "applyInPandas"): (1, "sequential trader state machine, relaxed scope — ONE pass emitting trades + balances as a tagged union (r12 ADVICE: halves the Python cost when intraday_backtest needs both)"),
+        ("stateful/trader.py", "_combined_local", "applyInPandas"): (1, "sequential trader state machine, faithful or relaxed scope — ONE pass emitting trades + balances as a tagged union, so intraday_backtest runs the trader once for both outputs"),
     }
 
     root = os.path.dirname(sparkwrangle.__file__)
@@ -751,7 +751,6 @@ def test_checkpoint_sites_are_allowlisted():
         ("catalog_ext.py", "x_pagerank_centrality"): (1, "per-round rank vector, vertex-sized"),
         ("catalog_relational.py", "q_rank_family"): (1, "top-5 per event_type, bounded"),
         ("ext/dedup.py", "connected_components"): (3, "edge list once + per-round label vector, vertex-sized"),
-        ("ext/dedup.py", "connected_components_propagation"): (3, "edge list once + per-round label vector, vertex-sized"),
         ("ext/dedup.py", "lsh_verified_pairs"): (1, "LSH candidate pair list, candidate-sized"),
         ("ext/dedup.py", "prefix_filter_pairs"): (2, "rarest-first ranked stream (distinct shingles + pos/sz) feeding both self-join sides AND the exact-verify member sets + candidate pairs"),
         ("ext/dedup.py", "edit_distance_pairs"): (1, "q-gram candidate pairs, candidate-sized"),
@@ -759,7 +758,7 @@ def test_checkpoint_sites_are_allowlisted():
         ("ext/graph.py", "_power_iterations"): (1, "per-round rank vector, vertex-sized"),
         ("ext/similarity.py", "pq_adc_topk"): (1, "trained codebook, m*K rows"),
         ("ext/text.py", "bpe_train"): (2, "per-round merge row + per-round symbol table, vocab-sized"),
-        ("pipelines/intraday.py", "intraday_backtest"): (1, "relaxed-mode combined local pass (ticks + trades rows — the relation the operator produces anyway); the lineage break is what lets the trade and balance stitches share ONE applyInPandas execution"),
+        ("pipelines/intraday.py", "intraday_backtest"): (1, "combined local pass of either scope, faithful or relaxed (ticks + trades rows — the relation the operator produces anyway); the lineage break is what lets both outputs and every report read share ONE applyInPandas execution"),
     }
 
     root = os.path.dirname(sparkwrangle.__file__)

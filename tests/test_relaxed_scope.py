@@ -242,20 +242,18 @@ def test_relaxed_fixed_sizing_warns_at_call_time(spark, feed_with_blocks):
     )
 
 
-def test_intraday_backtest_relaxed_single_pass(spark, feed_with_blocks):
-    """Round-12 ADVICE: intraday_backtest in relaxed mode runs the
-    per-(company, block) Python state machine ONCE — a combined tagged-
-    union local pass, checkpointed and split JVM-side. Pinned two ways:
-    (a) value parity with the standalone relaxed operators, (b) the
-    returned plans read from the checkpoint (no FlatMapGroupsInPandas
-    left in either output's physical plan)."""
-    trades, balances = intraday_backtest(
-        feed_with_blocks, TRADER_PARAMS, state_scope="block"
-    )
+def _assert_single_pass(feed, state_scope):
+    """intraday_backtest runs the Python state machine ONCE per call — a
+    combined tagged-union local pass, checkpointed and split JVM-side.
+    Pinned two ways: (a) value parity with the standalone operators of
+    the same scope, (b) the returned plans read from the checkpoint (no
+    FlatMapGroupsInPandas left in either output's physical plan)."""
+    trades, balances = intraday_backtest(feed, TRADER_PARAMS, state_scope=state_scope)
     ref_trades = _trades_pdf(
-        backtest_trades(feed_with_blocks, TRADER_PARAMS, state_scope="block")
+        backtest_trades(feed, TRADER_PARAMS, state_scope=state_scope)
     )
     got_trades = _trades_pdf(trades)
+    assert len(got_trades) > 3, "fixture must produce trades"
     assert list(got_trades.company) == list(ref_trades.company)
     assert list(got_trades.trade_seq) == list(ref_trades.trade_seq)
     assert list(got_trades.close_type) == list(ref_trades.close_type)
@@ -264,7 +262,7 @@ def test_intraday_backtest_relaxed_single_pass(spark, feed_with_blocks):
     )
 
     ref_bal = (
-        backtest_balances(feed_with_blocks, TRADER_PARAMS, state_scope="block")
+        backtest_balances(feed, TRADER_PARAMS, state_scope=state_scope)
         .orderBy("company", "ts")
         .toPandas()
     )
@@ -278,3 +276,16 @@ def test_intraday_backtest_relaxed_single_pass(spark, feed_with_blocks):
             "combined-pass outputs must read the checkpointed local "
             "relation, not re-run the Python stage"
         )
+
+
+def test_intraday_backtest_relaxed_single_pass(spark, feed_with_blocks):
+    _assert_single_pass(feed_with_blocks, "block")
+
+
+def test_intraday_backtest_faithful_single_pass(spark, feed_with_blocks):
+    """Faithful mode shares the single pass, grouped by company alone, on
+    the default feed shape (no block_id column)."""
+    no_block = feed_with_blocks.drop("block_id")
+    _assert_single_pass(no_block, "company")
+    with pytest.raises(ValueError, match="state_scope"):
+        intraday_backtest(no_block, TRADER_PARAMS, state_scope="weekly")
